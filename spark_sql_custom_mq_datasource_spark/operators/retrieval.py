@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
-from ..plans.util import session_key, tp, work_dir
+from ..plans.util import session_key, swap_dir, tp, work_dir
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -485,32 +485,28 @@ def append_bm25_index(docs_batch: DataFrame, path: str) -> None:
     )
     # Crash-consistency (ADVICE r05 item 5): the folded stats are staged
     # BEFORE the postings append, then swapped in with a directory rename
-    # AFTER it commits. A failure before the append leaves the old
-    # (postings, stats) pair intact and an orphaned staging dir; a failure
-    # between append and swap leaves appended postings with stale stats —
-    # the narrow remaining window — which the NEXT append cannot silently
-    # compound: the recovery contract is "a leftover stats_staged dir means
-    # the last append is of unknown state; rebuild stats from the postings
+    # AFTER it commits (swap_dir: the append runs inside the build step).
+    # A failure before the append leaves the old (postings, stats) pair
+    # intact and an orphaned staging dir; a failure between append and
+    # swap leaves appended postings with stale stats — the narrow
+    # remaining window — which the NEXT append cannot silently compound:
+    # the recovery contract is "a leftover stats_staged dir means the
+    # last append is of unknown state; rebuild stats from the postings
     # (one aggregation) or re-run the append idempotently after pruning
-    # the batch's files". On a real lake the swap is the catalog's atomic
-    # manifest commit; os.replace is the single-node stand-in.
+    # the batch's files".
     rows = folded.collect()
-    staged = os.path.join(path, "stats_staged")
-    spark.createDataFrame(rows, "n_docs long, avgdl double, dlsum long").write.mode(
-        "overwrite"
-    ).parquet(staged)
-    tf.withColumn(
-        "bkt", F.pmod(F.hash("t"), F.lit(BM25_INDEX_BUCKETS))
-    ).write.mode("append").partitionBy("bkt").parquet(
-        os.path.join(path, "postings")
-    )
-    import shutil
 
-    retired = os.path.join(path, "stats_retired")
-    shutil.rmtree(retired, ignore_errors=True)
-    os.replace(os.path.join(path, "stats"), retired)
-    os.replace(staged, os.path.join(path, "stats"))
-    shutil.rmtree(retired, ignore_errors=True)
+    def stage_then_append(staged: str) -> None:
+        spark.createDataFrame(
+            rows, "n_docs long, avgdl double, dlsum long"
+        ).write.mode("overwrite").parquet(staged)
+        tf.withColumn(
+            "bkt", F.pmod(F.hash("t"), F.lit(BM25_INDEX_BUCKETS))
+        ).write.mode("append").partitionBy("bkt").parquet(
+            os.path.join(path, "postings")
+        )
+
+    swap_dir(os.path.join(path, "stats"), stage_then_append)
 
 
 @register(

@@ -42,7 +42,16 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
-from ..plans.util import materialize_small, session_key, t, tp, work_dir
+from ..plans.util import (
+    assert_rows_equal,
+    dir_stats,
+    materialize_small,
+    session_key,
+    swap_dir,
+    t,
+    tp,
+    work_dir,
+)
 
 TOPK = 5
 N_QUERIES = 5  # fixture queries: vec_id < 5
@@ -3977,6 +3986,18 @@ def q_pq_coarse_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_coarse_refresh_readout(spark, emb)
 
 
+def _copy_unchanged_cells(current: str, staged: str, changed: list) -> None:
+    """File-level copy of every ``label=`` cell dir of ``current`` whose
+    label is not in ``changed`` into ``staged`` — the coarse refreshes'
+    never-re-encoded cells."""
+    import os as _os
+    import shutil as _shutil
+
+    for d in _os.listdir(current):
+        if d.startswith("label=") and int(d.split("=", 1)[1]) not in changed:
+            _shutil.copytree(_os.path.join(current, d), _os.path.join(staged, d))
+
+
 def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """The refresh over ANY (vec_id, embedding, label) table — split from
     the registered query so tests can drive it with a CONSTRUCTED corpus
@@ -3984,7 +4005,6 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     means shift nearly every cell, so the moved-subset arithmetic is only
     assertable on constructed geometry)."""
     import os as _os
-    import shutil as _shutil
 
     from pyspark.storagelevel import StorageLevel
 
@@ -4039,48 +4059,23 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     changed = sorted(lb for lb in f_map if f_map[lb] != h_map[lb])
     n_changed_cells = len(changed)
 
-    # stat-pin the live index: no file may change before the swap
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    _os.makedirs(staged, exist_ok=True)
-    if changed:
-        # re-encode ONLY the moved cells' vectors against the fresh
-        # centroids (codebooks frozen)
-        (
-            pq_residual_encode(
-                emb.where(F.col("label").isin(changed)), cci_f, rcdf
+    def build(staged: str) -> None:
+        if changed:
+            # re-encode ONLY the moved cells' vectors against the fresh
+            # centroids (codebooks frozen)
+            (
+                pq_residual_encode(
+                    emb.where(F.col("label").isin(changed)), cci_f, rcdf
+                )
+                .write.mode("overwrite")
+                .partitionBy("label")
+                .parquet(staged)
             )
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(staged)
-        )
-    # unchanged cells: file-level copy, never re-encoded (at an object
-    # store this is a server-side copy/rename — metadata-rate)
-    for d in _os.listdir(current):
-        if d.startswith("label=") and int(d.split("=", 1)[1]) not in changed:
-            _shutil.copytree(
-                _os.path.join(current, d), _os.path.join(staged, d)
-            )
+        # unchanged cells: file-level copy, never re-encoded (at an object
+        # store this is a server-side copy/rename — metadata-rate)
+        _copy_unchanged_cells(current, staged, changed)
 
-    post_stats = stat_map(current)
-    if post_stats != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    swap_dir(current, build)
 
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (cci_f, frozen codebooks)
@@ -4095,10 +4090,11 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     probe = residual_probe_topk(q, rcdf, cci_f, refreshed)
     full = residual_probe_topk(q, rcdf, cci_f, pq_residual_encode(emb, cci_f, rcdf))
     probe_rows = probe.collect()
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "incremental refresh probe differs from the full re-encode"
-        )
+    assert_rows_equal(
+        probe_rows,
+        full.collect(),
+        "incremental refresh probe differs from the full re-encode",
+    )
     sv.unpersist()
     rsv_h.unpersist()
     n_total = emb.count()
@@ -4911,7 +4907,6 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     registered query so tests can drive it with constructed drift
     geometry (dims moved / not moved, saturating tails)."""
     import os as _os
-    import shutil as _shutil
 
     # stale grid: trained on the even-vec_id half (the original build)
     mn_h, mx_h = _sq8_raw_minmax(emb.where(F.col("vec_id") % 2 == 0))
@@ -4935,29 +4930,12 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     )
     n_sat_after = _sq8_out_of_grid_count(emb, mn_f, mx_f)
 
-    # stat-pin the live index: no file may change before the swap
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    sq8_encode(emb, mn_f, rng_f).write.mode("overwrite").parquet(staged)
-
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    swap_dir(
+        current,
+        lambda staged: sq8_encode(emb, mn_f, rng_f)
+        .write.mode("overwrite")
+        .parquet(staged),
+    )
 
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
@@ -4966,8 +4944,9 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     probe = sq8_topk(refreshed, queries, mn_f, rng_f, TOPK)
     probe_rows = probe.collect()
     full = sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK)
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError("refreshed probe differs from the full rebuild")
+    assert_rows_equal(
+        probe_rows, full.collect(), "refreshed probe differs from the full rebuild"
+    )
 
     counts = spark.createDataFrame(
         [(int(n_dims_moved), int(n_sat_before), int(n_sat_after))],
@@ -5482,7 +5461,6 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     the registered query so tests can drive it with constructed geometry
     where only SOME cells' centroids move."""
     import os as _os
-    import shutil as _shutil
 
     half = emb.where(F.col("vec_id") % 2 == 0)
 
@@ -5517,46 +5495,24 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     changed = sorted(lb for lb in f_map if f_map[lb] != h_map[lb])
     n_changed_cells = len(changed)
 
-    # stat-pin the live index: no file may change before the swap
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    _os.makedirs(staged, exist_ok=True)
-    if changed:
-        # re-encode ONLY the moved cells' vectors against the fresh
-        # centroids (residual grid frozen)
-        moved = emb.where(F.col("label").isin(changed))
-        (
-            sq8_encode_ints(
-                _sq8_residuals(moved, cells_f_df), "rv", mn, rng, clamp=True
+    def build(staged: str) -> None:
+        if changed:
+            # re-encode ONLY the moved cells' vectors against the fresh
+            # centroids (residual grid frozen)
+            moved = emb.where(F.col("label").isin(changed))
+            (
+                sq8_encode_ints(
+                    _sq8_residuals(moved, cells_f_df), "rv", mn, rng, clamp=True
+                )
+                .write.mode("overwrite")
+                .partitionBy("label")
+                .parquet(staged)
             )
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(staged)
-        )
-    # unchanged cells: file-level copy, never re-encoded (object store:
-    # server-side copy/rename — metadata-rate)
-    for d in _os.listdir(current):
-        if d.startswith("label=") and int(d.split("=", 1)[1]) not in changed:
-            _shutil.copytree(_os.path.join(current, d), _os.path.join(staged, d))
+        # unchanged cells: file-level copy, never re-encoded (object
+        # store: server-side copy/rename — metadata-rate)
+        _copy_unchanged_cells(current, staged, changed)
 
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    swap_dir(current, build)
 
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (fresh cells, frozen grid)
@@ -5576,10 +5532,11 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     full = ivf_sq8_residual_scan_topk(
         full_codes, queries, probed, mn, rng, cells_f, TOPK
     )
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "incremental coarse refresh probe differs from the full re-encode"
-        )
+    assert_rows_equal(
+        probe_rows,
+        full.collect(),
+        "incremental coarse refresh probe differs from the full re-encode",
+    )
 
     n_total = emb.count()
     n_moved = emb.where(F.col("label").isin(changed)).count() if changed else 0
@@ -5839,7 +5796,6 @@ def sq8_residual_grid_refresh_readout(
     frame — split from the registered query so tests can drive it with
     constructed within-cell drift geometry."""
     import os as _os
-    import shutil as _shutil
 
     # frozen cells (the original build's centroids — they do NOT move)
     cells_h = ivf_sq8_cells(emb.where(F.col("vec_id") % 2 == 0))
@@ -5872,33 +5828,13 @@ def sq8_residual_grid_refresh_readout(
     )
     n_sat_after = _arr_out_of_grid_count(rem, "rv", mn_f, mx_f)
 
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    (
-        sq8_encode_ints(rem, "rv", mn_f, rng_f)
+    swap_dir(
+        current,
+        lambda staged: sq8_encode_ints(rem, "rv", mn_f, rng_f)
         .write.mode("overwrite")
         .partitionBy("label")
-        .parquet(staged)
+        .parquet(staged),
     )
-
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
 
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
@@ -5921,8 +5857,9 @@ def sq8_residual_grid_refresh_readout(
         cells_h,
         TOPK,
     )
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError("refreshed probe differs from the full rebuild")
+    assert_rows_equal(
+        probe_rows, full.collect(), "refreshed probe differs from the full rebuild"
+    )
 
     counts = spark.createDataFrame(
         [(int(n_dims_moved), int(n_sat_before), int(n_sat_after))],
@@ -6132,10 +6069,11 @@ def q_sq8_dim_columnar_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = sq8_topk(codes_arr, queries, mn, rng, TOPK)
     probe_rows = probe.collect()
     full = sq8_topk(sq8_encode(emb, mn, rng), queries, mn, rng, TOPK)
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "zipper-merge serving differs from the array-row scan"
-        )
+    assert_rows_equal(
+        probe_rows,
+        full.collect(),
+        "zipper-merge serving differs from the array-row scan",
+    )
     out = spark.createDataFrame(probe_rows, probe.schema)
     return out.orderBy("qid", "rk")
 
@@ -6148,7 +6086,6 @@ def sq8_dim_columnar_refresh_readout(
     constructed corpus where exactly K dims move (the rewrite-fraction
     measurement)."""
     import os as _os
-    import shutil as _shutil
 
     # stale grid: trained on the even-vec_id half (the original build)
     mn_h, mx_h = _sq8_raw_minmax(emb.where(F.col("vec_id") % 2 == 0))
@@ -6171,18 +6108,9 @@ def sq8_dim_columnar_refresh_readout(
         if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
     ]
 
-    def stat_map(path: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(path):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
     # unmoved dims' column files must survive the WHOLE refresh untouched
     unmoved_pre = {
-        d: stat_map(_os.path.join(root, f"d={d}"))
+        d: dir_stats(_os.path.join(root, f"d={d}"))
         for d in range(len(mn_f))
         if d not in moved
     }
@@ -6198,10 +6126,9 @@ def sq8_dim_columnar_refresh_readout(
                 f" DIV {rng_f[d]}L AS INT)"
             ).alias("code"),
         )
-        staged_d = _os.path.join(state, f"staged_d{d}")
-        _shutil.rmtree(staged_d, ignore_errors=True)
-        (
-            col_df.withColumn(
+        swap_dir(
+            _os.path.join(root, f"d={d}"),
+            lambda staged: col_df.withColumn(
                 "bucket",
                 (F.col("vec_id") % SQ8_DIMCOL_BUCKETS).cast("int"),
             )
@@ -6209,17 +6136,11 @@ def sq8_dim_columnar_refresh_readout(
             .sortWithinPartitions("bucket", "vec_id")
             .write.mode("overwrite")
             .partitionBy("bucket")
-            .parquet(staged_d)
+            .parquet(staged),
         )
-        target = _os.path.join(root, f"d={d}")
-        retired = _os.path.join(state, f"retired_d{d}")
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(target, retired)
-        _os.replace(staged_d, target)
-        _shutil.rmtree(retired, ignore_errors=True)
 
     unmoved_post = {
-        d: stat_map(_os.path.join(root, f"d={d}")) for d in unmoved_pre
+        d: dir_stats(_os.path.join(root, f"d={d}")) for d in unmoved_pre
     }
     if unmoved_post != unmoved_pre:
         raise AssertionError("unmoved dims' column files were rewritten")
@@ -6234,10 +6155,11 @@ def sq8_dim_columnar_refresh_readout(
     probe = sq8_topk(codes_arr, queries, mn_f, rng_f, TOPK)
     probe_rows = probe.collect()
     full = sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK)
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "dim-columnar serving differs from the array-row rebuild"
-        )
+    assert_rows_equal(
+        probe_rows,
+        full.collect(),
+        "dim-columnar serving differs from the array-row rebuild",
+    )
 
     counts = spark.createDataFrame(
         [(int(len(moved)), int(len(mn_f)))],
@@ -6375,10 +6297,11 @@ def _ann_delete_mor_body(
 
     survivors = emb.join(dels, "vec_id", "left_anti")
     full = fam.scan(prune(fam.encode(survivors)))
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "merge-on-read serving differs from the survivors-only encode"
-        )
+    assert_rows_equal(
+        probe_rows,
+        full.collect(),
+        "merge-on-read serving differs from the survivors-only encode",
+    )
     out = spark.createDataFrame(probe_rows, probe.schema)
     return out.orderBy("qid", "rk")
 
@@ -6394,7 +6317,6 @@ def _ann_delete_apply_body(
     contract as the MOR body; fam.partition_by names the layout's
     physical partition columns (empty for flat layouts like BQ)."""
     import os as _os
-    import shutil as _shutil
 
     def prune(df: DataFrame) -> DataFrame:
         if fam.all_probed is None:
@@ -6425,28 +6347,12 @@ def _ann_delete_apply_body(
         spark.read.parquet(current).join(dels, "vec_id", "semi").count()
     )
 
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                pth = _os.path.join(r, fn)
-                st = _os.stat(pth)
-                out[pth] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-    staged = current + "_staged"
-    _shutil.rmtree(staged, ignore_errors=True)
-    write_codes(
-        spark.read.parquet(current).join(dels, "vec_id", "left_anti"), staged
+    swap_dir(
+        current,
+        lambda staged: write_codes(
+            spark.read.parquet(current).join(dels, "vec_id", "left_anti"), staged
+        ),
     )
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
 
     rows_after = spark.read.parquet(current).count()
     if rows_before - rows_after != n_tombstoned_rows:
@@ -6457,8 +6363,7 @@ def _ann_delete_apply_body(
 
     post_df = fam.scan(prune(spark.read.parquet(current)))
     post_rows = post_df.collect()
-    if sorted(map(tuple, post_rows)) != pre:
-        raise AssertionError("probe changed across the delete apply")
+    assert_rows_equal(post_rows, pre, "probe changed across the delete apply")
     out = spark.createDataFrame(post_rows, post_df.schema)
     return out.orderBy("qid", "rk")
 
@@ -7481,7 +7386,6 @@ _SQL_BQ_REFRESH = f"""
 )
 def q_bq_threshold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil as _shutil
 
     emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
@@ -7495,34 +7399,19 @@ def q_bq_threshold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_f = bq_thresholds(emb)
     n_moved = sum(1 for a, b in zip(t_h, t_f) if a != b)
 
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-    staged = current + "_staged"
-    _shutil.rmtree(staged, ignore_errors=True)
-    bq_pack(emb, t_f).write.mode("overwrite").parquet(staged)
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    swap_dir(
+        current,
+        lambda staged: bq_pack(emb, t_f).write.mode("overwrite").parquet(staged),
+    )
 
     probe = bq_serve(
         spark.read.parquet(current), bq_query_bits(spark, sf_dir, t_f)
     )
     probe_rows = probe.collect()
     full = bq_serve(bq_pack(emb, t_f), bq_query_bits(spark, sf_dir, t_f))
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError("refreshed probe differs from the full rebuild")
+    assert_rows_equal(
+        probe_rows, full.collect(), "refreshed probe differs from the full rebuild"
+    )
 
     counts = spark.createDataFrame(
         [(int(n_moved), int(SQ8_DIM))],
@@ -7631,11 +7520,12 @@ def q_ann_sq8_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         rng,
         TOPK,
     )
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "partition-pruned filtered serving differs from "
-            "encode-then-filter"
-        )
+    assert_rows_equal(
+        probe_rows,
+        full.collect(),
+        "partition-pruned filtered serving differs from "
+        "encode-then-filter",
+    )
     out = spark.createDataFrame(probe_rows, probe.schema)
     return out.orderBy("qid", "rk")
 

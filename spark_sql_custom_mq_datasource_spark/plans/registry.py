@@ -251,84 +251,10 @@ _PRIORITY: tuple[str, ...] = (
     "q21_waiting_suppliers",
 )
 # The ROUND-17 prefix this replaces (all 50 green in CORRECTNESS_r17.json):
-_ROUND17_PREFIX_RETIRED = (
-    # ==== ROUND-17 PREFIX ===============================================
-    # (executes the round-16 rotation plan below / VERDICT r16 item 1)
-    # -- the 16 round-17 additions (never driver-checked; locally green
-    #    at sf0.001 AND sf0.01): the delete pair on BOTH persisted PQ
-    #    layouts through the parameterized MOR/APPLY bodies (VERDICT r16
-    #    missing 1), the persisted BQ index + its grow/compact/health
-    #    lifecycle (missing 2) PLUS the BQ delete pair and the BQ
-    #    threshold refresh (lifecycle symmetry closed on all FIVE
-    #    persisted layouts), the TIME-sliced co-presence stream with
-    #    stateful session stitching (missing 3), the dim-columnar
-    #    zipper-merge serving query (missing 4), and the filtered-ANN
-    #    pair (pre-filter via partition pruning + post-filter loss)
-    #    and binary IVF (majority-bit centroids, Hamming coarse prune) -
-    "q_ann_pq_delete_mor",
-    "q_pq_delete_compact",
-    "q_ann_pq_residual_delete_mor",
-    "q_pq_residual_delete_compact",
-    "q_ann_bq_persisted",
-    "q_stream_bq_index_grow",
-    "q_bq_index_compact",
-    "q_bq_index_health",
-    "q_ann_bq_delete_mor",
-    "q_bq_delete_compact",
-    "q_bq_threshold_refresh",
-    "q_stream_sessions_overlap_timesliced",
-    "q_sq8_dim_columnar_serve",
-    "q_ann_sq8_filtered",
-    "q_ann_filtered_postfilter_loss",
-    "q_ann_bq_ivf",
-    # -- code or oracle changed this round, so driver-RE-check even
-    #    though r16 green: the four SQ8 delete queries moved onto the
-    #    generalized _ann_delete_* bodies (keys-table tombstone
-    #    contract; row-delta invariant generalized to tombstoned ROWS);
-    #    q_ann_ivf_pq_persisted's serving tail factored into
-    #    pq_probe_tables/pq_adc_rank (shared with the delete family);
-    #    q_sq8_dim_columnar_refresh moved onto the co-bucketed co-sorted
-    #    layout + zipper serving; q_ann_binary_quantized's oracle moved
-    #    into the shared _SQL_BQ_TOPK constant (byte-identical) ---------
-    "q_ann_sq8_delete_mor",
-    "q_sq8_delete_compact",
-    "q_ann_sq8_residual_delete_mor",
-    "q_sq8_residual_delete_compact",
-    "q_ann_ivf_pq_persisted",
-    "q_sq8_dim_columnar_refresh",
-    "q_ann_binary_quantized",
-    # -- ALL 25 remaining r10-stale records, oldest-first
-    #    (tools/rotation_plan.py order) — after this round NO record is
-    #    older than r11 -------------------------------------------------
-    "q_cdf_incremental_consumer",
-    "q_funnel_stages",
-    "q_gapfill_user_daily",
-    "q_gapfill_locf",
-    "q_conversion_within_window",
-    "q_daily_trend_by_type",
-    "q_ab_cuped",
-    "q_events_cusum",
-    "q_decile_lift",
-    "q_events_json_extract",
-    "q_events_sliding_6h",
-    "q_events_pivot_daily",
-    "q_fuzzy_source_pairs",
-    "q_mqlog_roundtrip",
-    "q_map_functions",
-    "q_histogram_equidepth",
-    "q_stream_dedup_incremental",
-    "q_dedup_index_compact",
-    "q_stream_source_quota",
-    "q_stream_anomaly_zscore",
-    "q_stream_heavy_hitters",
-    "q_stream_table_fingerprint",
-    "q_partition_pruned_day",
-    "q_compaction_plan",
-    "q_table_fingerprint",
-    # -- 2 r11-stale records fill to 50, oldest-first ------------------
-    "q_heavy_hitters_2gram",
-    "q_dedup_simhash",
-)
+# the 16 round-17 additions (PQ/BQ delete pairs, the BQ index lifecycle,
+# time-sliced co-presence, dim-columnar zipper serving, filtered ANN,
+# binary IVF), 7 r17-changed re-checks and 27 r10/r11-stale records —
+# see CORRECTNESS_r17.json for the exact list.
 # The ROUND-16 prefix this replaces (all 50 green in CORRECTNESS_r16.json):
 # the 14 round-16 additions (coarse/residual-grid refresh, dim-columnar
 # refresh, streaming co-presence + bin-index compaction, SQ8 + residual

@@ -74,28 +74,31 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
 # Minimum compressed input bytes one compute task should own before more
 # spread pays: below this the fixed per-task cost (scheduling, codegen
 # entry, Arrow/python-worker round-trip) exceeds the work it parallelizes.
-# Measured (tools/probe_tp_width.py, sf0.1, local[32], best-of-3): forcing
+# Measured (sf0.1, local[32], best-of-3, fixed-width sweep): forcing
 # the spread from 32 to the 8-16 band this constant yields read 1.2-1.7x
 # faster on EVERY probed compute-heavy query (q_lm_perplexity 0.99->0.60 s,
 # q_ann_sq8_topk 1.90->1.40, q_dedup_substring_spans 1.36->0.81,
 # q_pipeline_end_to_end 2.93->2.10, q_bm25_topk 2.11->1.57, ...); width 4
 # over-serialized the heaviest (q_heavy_hitters_2gram, q_semantic_kmeans),
-# so the floor stays bytes-derived rather than a constant. Env-overridable
-# for probing; the cap is ALWAYS cluster parallelism, so at real scale the
-# formula saturates to exactly the old behavior (guide §2.2: partition
-# from input size, never from the machine alone).
+# so the floor stays bytes-derived rather than a constant. The cap is
+# ALWAYS cluster parallelism, so at real scale the formula saturates to
+# exactly the old behavior (guide §2.2: partition from input size, never
+# from the machine alone).
 TP_BYTES_PER_TASK = 64 * 1024
 
 
-def _fixture_bytes(sf_dir: str, name: str) -> int:
-    """Compressed on-disk size of one fixture table — a local-FS listing
-    (the fixtures are driver-local files by the TESTDATA contract; a
-    remote store would list via the Hadoop FS API instead)."""
-    path = f"{sf_dir}/{name}.parquet"
+def data_bytes(path: str) -> int:
+    """Bytes of data under ``path`` (a file or a directory tree) — a
+    driver-local listing (fixtures and feeds are local files by the
+    TESTDATA/work_dir contract; a remote store would list via the Hadoop
+    FS API instead). Hidden and metadata entries (leading '_' or '.':
+    _SUCCESS, .crc, _spark_metadata/, .checkpoint/) are skipped, files
+    and directories alike, mirroring Spark's own data-file filter."""
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for fname in files:
             if not fname.startswith(("_", ".")):
                 try:
@@ -128,14 +131,8 @@ def tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (session_key(spark), sf_dir, name, "tp")
     if key not in _cache:
         df = t(spark, sf_dir, name)
-        per_task = int(
-            os.environ.get("SPARK_GRAFT_TP_BYTES_PER_TASK", TP_BYTES_PER_TASK)
-        )
-        need = -(-_fixture_bytes(sf_dir, name) // max(per_task, 1))
+        need = -(-data_bytes(f"{sf_dir}/{name}.parquet") // TP_BYTES_PER_TASK)
         target = min(spark.sparkContext.defaultParallelism, max(1, need))
-        probe = os.environ.get("SPARK_GRAFT_TP_WIDTH")  # probe knob, see tools/probe_tp_width.py
-        if probe:
-            target = min(spark.sparkContext.defaultParallelism, max(1, int(probe)))
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
         _cache[key] = df
@@ -168,6 +165,61 @@ def work_dir(name: str) -> str:
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     return path
+
+
+def dir_stats(root: str) -> dict[str, tuple[int, int]]:
+    """{path: (size, mtime_ns)} of every file under ``root`` — the pin
+    swap_dir takes on the live copy before it stages a replacement."""
+    out = {}
+    for r, _, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(r, fn)
+            st = os.stat(p)
+            out[p] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def swap_dir(live: str, build) -> None:
+    """Replace directory ``live`` with a freshly built copy — the one
+    persisted-index swap every maintenance verb (refresh, delete apply,
+    compaction, stats fold) goes through.
+
+    Stat-pin the live files, call ``build(staged)`` to write the new copy
+    into the empty sibling ``<live>_staged``, and REFUSE (AssertionError,
+    nothing swapped) if any live file changed meanwhile — a concurrent
+    writer's work must never be silently retired. Then retire the live
+    directory, rename the staged one in and delete the retired copy.
+    os.replace is atomic on POSIX — the single-node stand-in for a
+    catalog's atomic manifest commit on a lake.
+
+    A ``key=value`` partition directory (``codes/d=3``) stages beside
+    its table root (``codes_d3_staged``), never inside it: a leftover
+    from a failed build must not break the table's partition discovery."""
+    import shutil
+
+    pin = dir_stats(live)
+    base, tag = os.path.normpath(live), ""
+    while "=" in os.path.basename(base):
+        base, part = os.path.split(base)
+        tag = "_" + part.replace("=", "") + tag
+    staged, retired = base + tag + "_staged", base + tag + "_retired"
+    shutil.rmtree(staged, ignore_errors=True)
+    os.makedirs(staged)
+    build(staged)
+    if dir_stats(live) != pin:
+        raise AssertionError(f"live index files changed before the swap: {live}")
+    shutil.rmtree(retired, ignore_errors=True)
+    os.replace(live, retired)
+    os.replace(staged, live)
+    shutil.rmtree(retired, ignore_errors=True)
+
+
+def assert_rows_equal(got, want, what: str) -> None:
+    """Raise AssertionError(``what``) unless two collected row lists hold
+    the same rows, order-free — the probe-identity check every index
+    swap ends with (probe vs full rebuild, or probe before vs after)."""
+    if sorted(map(tuple, got)) != sorted(map(tuple, want)):
+        raise AssertionError(what)
 
 
 _WORK_GC_DONE = False

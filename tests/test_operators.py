@@ -1839,6 +1839,85 @@ class TestMultiprobeLsh:
             assert multi[qid] >= single[qid], (qid, single[qid], multi[qid])
 
 
+class TestSwapDir:
+    def _live(self, tmp_path):
+        live = tmp_path / "index" / "current"
+        (live / "label=0").mkdir(parents=True)
+        (live / "label=0" / "part-0.parquet").write_bytes(b"old-cell-0")
+        (live / "part-1.parquet").write_bytes(b"old-1")
+        return live
+
+    @staticmethod
+    def _snapshot(root):
+        return {
+            str(p.relative_to(root)): p.read_bytes()
+            for p in root.rglob("*")
+            if p.is_file()
+        }
+
+    def test_swaps_staged_copy_in(self, tmp_path):
+        from pathlib import Path
+
+        from spark_sql_custom_mq_datasource_spark.plans.util import swap_dir
+
+        live = self._live(tmp_path)
+        swap_dir(
+            str(live), lambda staged: Path(staged, "new.parquet").write_bytes(b"new")
+        )
+        assert self._snapshot(live) == {"new.parquet": b"new"}
+        assert sorted(p.name for p in (tmp_path / "index").iterdir()) == [
+            "current"
+        ]
+
+    def test_refuses_when_live_file_changed_after_pin(self, tmp_path):
+        """A live file touched between the pin and the swap (a concurrent
+        writer) makes the swap RAISE: the live directory stays byte-intact
+        and the staged copy is never renamed in."""
+        import os
+        from pathlib import Path
+
+        from spark_sql_custom_mq_datasource_spark.plans.util import swap_dir
+
+        live = self._live(tmp_path)
+        before = self._snapshot(live)
+        victim = live / "label=0" / "part-0.parquet"
+
+        def build(staged):
+            Path(staged, "new.parquet").write_bytes(b"new")
+            st = victim.stat()
+            os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+        with pytest.raises(AssertionError, match="changed before the swap"):
+            swap_dir(str(live), build)
+        assert self._snapshot(live) == before
+        assert not (tmp_path / "index" / "current_retired").exists()
+
+    def test_partition_dir_stages_outside_table_root(self, tmp_path):
+        """Swapping one ``key=value`` partition stages and retires it
+        beside the table root, so the root only ever holds partitions."""
+        from pathlib import Path
+
+        from spark_sql_custom_mq_datasource_spark.plans.util import swap_dir
+
+        root = tmp_path / "codes"
+        for d in (0, 1):
+            (root / f"d={d}").mkdir(parents=True)
+            (root / f"d={d}" / "part-0.parquet").write_bytes(b"old")
+        seen = []
+
+        def build(staged):
+            seen.append(Path(staged).parent)
+            Path(staged, "part-0.parquet").write_bytes(b"new")
+
+        swap_dir(str(root / "d=1"), build)
+        assert seen == [tmp_path]
+        assert self._snapshot(root) == {
+            "d=0/part-0.parquet": b"old",
+            "d=1/part-0.parquet": b"new",
+        }
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["codes"]
+
+
 class TestFixtureCacheIntegrity:
     def _patch_tmp(self, tmp_path, monkeypatch):
         import tempfile as _tf

@@ -10,6 +10,7 @@ sink path.
 from __future__ import annotations
 
 import collections
+import os
 import tempfile
 
 import pytest
@@ -133,6 +134,28 @@ class TestRocksDBStateStore:
         assert got == base
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
+    def test_drain_restores_shuffle_partitions_when_it_raises(self, spark):
+        """drain's state_partitions override is restored on the FAILURE
+        path too: a sink that raises mid-drain must not leave the
+        session pinned to the drain's partition count."""
+        from pyspark.errors import StreamingQueryException
+
+        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
+            drain,
+            events_stream,
+        )
+
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        assert before != "3"
+
+        def fail(bdf, batch_id):
+            raise RuntimeError("sink failure")
+
+        writer = events_stream(spark, SF).writeStream.foreachBatch(fail)
+        with pytest.raises(StreamingQueryException):
+            drain(spark, writer, "test_drain_raises", state_partitions=3)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
     def test_volume_state_parts_floor_scale_cap(self, spark, tmp_path):
         """volume_state_parts derives the state-partition count from the
         inbox's parquet byte volume: floored at small_state_parts for
@@ -152,15 +175,13 @@ class TestRocksDBStateStore:
         (d / "00.parquet").write_bytes(b"x" * 1024)
         assert volume_state_parts(spark, str(d)) == floor
         # a feed big enough to need more partitions than the floor
+        # (sparse files: the sizing reads only the listed byte counts)
         n_over = floor + 3
-        (d / "01.parquet").write_bytes(
-            b"x" * (VOLUME_BYTES_PER_STATE_PART * n_over)
-        )
+        (d / "01.parquet").write_bytes(b"")
+        os.truncate(d / "01.parquet", VOLUME_BYTES_PER_STATE_PART * n_over)
         assert volume_state_parts(spark, str(d)) == n_over + 1
         # and the cap: 8x parallelism, however big the feed claims to be
         (d / "02.parquet").write_bytes(b"")
-        import os
-
         os.truncate(d / "02.parquet", VOLUME_BYTES_PER_STATE_PART * para * 64)
         assert volume_state_parts(spark, str(d)) == para * 8
 
@@ -170,22 +191,31 @@ class TestRocksDBStateStore:
         """A mixed inbox must size by ALL data files, not only *.parquet —
         a non-parquet feed silently took the floor before (VERDICT r17
         item 3 / ADVICE r17 item 1). Hidden/metadata names (_SUCCESS,
-        .crc) stay excluded."""
+        .crc) stay excluded, and so do plain-named files inside hidden/
+        metadata DIRECTORIES (_spark_metadata/0, .checkpoint/...)."""
         from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
             VOLUME_BYTES_PER_STATE_PART,
             small_state_parts,
             volume_state_parts,
         )
 
+        def sparse(path, size: int) -> None:
+            path.write_bytes(b"")
+            os.truncate(path, size)
+
         floor = small_state_parts(spark)
         n_over = floor + 3
         d = tmp_path / "inbox"
         d.mkdir()
-        (d / "00.json").write_bytes(b"x" * (VOLUME_BYTES_PER_STATE_PART * n_over))
+        sparse(d / "00.json", VOLUME_BYTES_PER_STATE_PART * n_over)
         assert volume_state_parts(spark, str(d)) == n_over
         # metadata/hidden files contribute nothing
-        (d / "_SUCCESS").write_bytes(b"x" * VOLUME_BYTES_PER_STATE_PART * 8)
-        (d / ".00.json.crc").write_bytes(b"x" * VOLUME_BYTES_PER_STATE_PART * 8)
+        sparse(d / "_SUCCESS", VOLUME_BYTES_PER_STATE_PART * 8)
+        sparse(d / ".00.json.crc", VOLUME_BYTES_PER_STATE_PART * 8)
+        (d / "_spark_metadata").mkdir()
+        sparse(d / "_spark_metadata" / "0", VOLUME_BYTES_PER_STATE_PART * 8)
+        (d / ".checkpoint").mkdir()
+        sparse(d / ".checkpoint" / "offsets", VOLUME_BYTES_PER_STATE_PART * 8)
         assert volume_state_parts(spark, str(d)) == n_over
 
 
